@@ -17,6 +17,14 @@ iteration: the learned rule. At 100 TB the corpus→vocab word count is
 the only corpus-scale shuffle; every iteration after that runs on
 vocabulary-sized data (~10⁶-10⁸ rows), which is the same regime the
 classic single-node trainers handle — except sharded.
+
+Cache lifecycle: each iteration's symbols are persisted with
+:func:`~mapreduce_word2vec_spark.runtime.tracked_persist`, which files
+them under the calling catalog query's scope, and the next merge folds
+a detached copy (:func:`~mapreduce_word2vec_spark.runtime.detach`) so
+the plan does not nest every earlier merge. Nothing is checkpointed.
+The trainer returns plain Python rules, so it unpersists its last
+caches itself before returning.
 """
 
 from __future__ import annotations
@@ -24,11 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_word2vec_spark.runtime import (
-    release_checkpoint,
-    tracked_local_checkpoint,
-    tracked_persist,
-)
+from mapreduce_word2vec_spark.runtime import detach, tracked_persist
 
 
 def _merge_fold(sym: Column, left: str, right: str) -> Column:
@@ -106,22 +110,17 @@ def train_bpe_merges(
         left, right, cnt = best[0]["l"], best[0]["r"], int(best[0]["cnt"])
         rules.append((rank, left, right, left + right, cnt))
         # Apply the merge: each iteration's fold runs on the PREVIOUS
-        # materialized symbols, keeping the per-iteration plan
-        # constant-depth. Every third merge the lineage is cut with an
-        # eager localCheckpoint (the connected_components/pagerank
-        # pattern) so a cache-block eviction under memory pressure
-        # never recomputes through the whole merge-fold chain.
-        folded = syms.select(
-            _merge_fold(F.col("sym"), left, right).alias("sym"), "freq"
+        # materialized symbols, detached so the per-iteration plan
+        # stays constant-depth.
+        prev = syms  # still feeding the new syms until its first action
+        syms = tracked_persist(
+            detach(syms).select(
+                _merge_fold(F.col("sym"), left, right).alias("sym"), "freq"
+            )
         )
-        if (rank + 1) % 3 == 0:
-            new_syms = tracked_local_checkpoint(folded)
-            syms.unpersist()  # checkpoint materialized — safe now
-            release_checkpoint(syms)  # no-op unless syms was a ckpt
-        else:
-            new_syms = tracked_persist(folded)
-            prev = syms  # still feeding new_syms until its first action
-        syms = new_syms
+    if prev is not None:
+        prev.unpersist()
+    syms.unpersist()
     return rules
 
 

@@ -313,8 +313,9 @@ def simhash_signatures(
     never borrow — and bit_j recovers as 2·lane_j − tot > 0. This
     halves the aggregation buffer (16 packed sums + 1 total vs 32
     conditional sums; measured ~20% faster at sf0.1, bit-identical
-    output). Lane overflow needs a single document of ≥ 2^31 tokens —
-    not a reachable document size."""
+    output). A 32-bit lane overflows only at 2^32 set-bit occurrences
+    of one bit within a single document (so ≥ 2^32 tokens) — not a
+    reachable document size."""
     toks = df.select(
         F.col(id_col).alias("doc_id"), F.explode(tokens_expr(text_col)).alias("w")
     )

@@ -6,10 +6,22 @@ generation (MinHash/SimHash/Jaccard pairs → clusters → one canonical
 doc per cluster).
 
 Spark-first shape: each iteration is one join + one aggregation, all
-Catalyst-planned; lineage is cut with ``localCheckpoint`` every few
-rounds so the plan doesn't grow with the iteration count. Converges
-in O(diameter) rounds (not O(V)) because labels propagate through
-BOTH edge directions each round.
+Catalyst-planned. Converges in O(diameter) rounds (not O(V)) because
+labels propagate through BOTH edge directions each round.
+
+Cache lifecycle: every persist goes through
+:func:`~mapreduce_word2vec_spark.runtime.tracked_persist`, so inside a
+catalog query it belongs to that query's scope and is freed when the
+query's result is garbage-collected. Operators that take an action per
+iteration (:func:`connected_components`, :func:`kcore`) persist each
+step and unpersist the previous one once the new one has materialized;
+:func:`connected_components`, whose round count grows with the graph's
+diameter, also builds each step on a detached copy of the last one
+(:func:`~mapreduce_word2vec_spark.runtime.detach`). Fixed-count
+recurrences (:func:`pagerank`, :func:`label_propagation`)
+take no action per iteration and run as one unrolled plan. Nothing is
+checkpointed, so a cache freed early costs a recompute from lineage,
+never a failed query.
 
 No fixed Spark primitive exists for this (GraphFrames is an external
 package), so this is the documented composition — SURVEY's category
@@ -21,11 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_word2vec_spark.runtime import (
-    release_checkpoint,
-    tracked_local_checkpoint,
-    tracked_persist,
-)
+from mapreduce_word2vec_spark.runtime import detach, tracked_persist
 
 
 def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -64,7 +72,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 20,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``;
     component = min node id reachable (undirected)."""
@@ -74,15 +81,15 @@ def connected_components(
         .distinct()
         .withColumn("component", F.col("node"))
     )
-    prev_ckpt: DataFrame | None = None
-    for i in range(max_iterations):
+    prev: DataFrame | None = None
+    for _ in range(max_iterations):
         # neighbor minimum this round
         msgs = (
             sym.join(labels, sym.s == labels.node)
             .groupBy(F.col("d").alias("node2"))
             .agg(F.min("component").alias("nbr_min"))
         )
-        updated = (
+        updated = tracked_persist(
             labels.join(msgs, labels.node == msgs.node2, "left")
             .select(
                 "node",
@@ -94,17 +101,16 @@ def connected_components(
                 ),
             )
         )
-        if (i + 1) % checkpoint_every == 0:
-            # eager checkpoint materialized — the PREVIOUS checkpoint's
-            # blocks are unreachable now and can be freed immediately
-            updated = tracked_local_checkpoint(updated)
-            if prev_ckpt is not None:
-                release_checkpoint(prev_ckpt)
-            prev_ckpt = updated
         n_changed = updated.where(F.col("_changed")).count()
+        # the count materialized this step's cache, so the previous
+        # step's is unreachable now and can be freed
+        if prev is not None:
+            prev.unpersist(blocking=False)
+        prev = updated
         labels = updated.drop("_changed")
         if n_changed == 0:
             break
+        labels = detach(labels)
     return labels
 
 
@@ -113,7 +119,6 @@ def label_propagation(
     src: str = "id_a",
     dst: str = "id_b",
     iterations: int = 3,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """(node, label) after a FIXED number of synchronous label
     propagation rounds (community detection): label'(v) = the most
@@ -128,14 +133,14 @@ def label_propagation(
     count aggregation, ONE argmax fold per node (``max_by`` over a
     (count, -label) struct — no window, so the per-node state is one
     running pair, not the sorted neighbor-label list). All three
-    hash-partition on node id; lineage is cut with ``localCheckpoint``
-    so the plan stays O(1) in the iteration count."""
+    hash-partition on node id. No action runs per iteration: the rounds
+    unroll into one plan of ``iterations`` levels over the persisted
+    edge list."""
     sym = _symmetrize(edges, src, dst)
     labels = sym.select(F.col("s").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
-    prev_ckpt: DataFrame | None = None
-    for i in range(iterations):
+    for _ in range(iterations):
         labels = (
             sym.join(labels, sym.s == labels.node)
             .groupBy(F.col("d").alias("node"), "label")
@@ -145,11 +150,6 @@ def label_propagation(
                 F.expr("max_by(label, struct(cnt, -label))").alias("label")
             )
         )
-        if (i + 1) % checkpoint_every == 0:
-            labels = tracked_local_checkpoint(labels)
-            if prev_ckpt is not None:
-                release_checkpoint(prev_ckpt)
-            prev_ckpt = labels
     return labels
 
 
@@ -182,7 +182,7 @@ def kcore(
             )
         )
         nxt.count()  # materialize before releasing the parent
-        cur.unpersist(blocking=False)  # tracked sweep tolerates this
+        cur.unpersist(blocking=False)  # the scope's later unpersist is a no-op
         cur = nxt
     out = cur.groupBy(F.col("s").alias("node")).agg(
         F.count("*").alias("degree")
@@ -196,7 +196,6 @@ def pagerank(
     dst: str = "id_b",
     iterations: int = 5,
     damping: float = 0.85,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """(node, rank) after a FIXED number of power iterations over the
     undirected edge list (both directions contribute): rank'(v) =
@@ -207,9 +206,9 @@ def pagerank(
     against the same recurrence unrolled in SQL. Scale shape per
     iteration: ONE join of the rank vector onto the out-edge list and
     ONE aggregation back onto nodes — both hash-partitioned on node id,
-    so Catalyst reuses the exchange across iterations; lineage is cut
-    with ``localCheckpoint`` like :func:`connected_components` so the
-    plan stays O(1) in the iteration count. Dangling nodes cannot occur
+    so Catalyst reuses the exchange across iterations. No action runs
+    per iteration: the rounds unroll into one plan of ``iterations``
+    levels over the persisted edge list. Dangling nodes cannot occur
     (symmetrized edges give every node degree ≥ 1)."""
     # Persisted for the same reason as in connected_components: the
     # edge list and degree table feed every iteration; without the
@@ -220,12 +219,16 @@ def pagerank(
     # the rank vector onto ONE table instead of re-joining sym⋈deg —
     # 5 iterations save 5 joins; rank/deg division is unchanged, so
     # the result stays bit-identical to the unrolled SQL oracle.
-    sym_deg = tracked_persist(sym.join(deg, "s"))
+    # Detached because every unrolled iteration reads it: left nested,
+    # its cached plan (and the pair generation under it) is rendered
+    # once per iteration in the plan description Spark rebuilds at
+    # every stage update (2.4 MB of text at 5 iterations on sf0.001,
+    # 0.18 MB detached).
+    sym_deg = detach(tracked_persist(sym.join(deg, "s")))
     # N collected ONCE as a scalar (r9): the former 1-row n_nodes
     # aggregate rode a crossJoin(broadcast(...)) into the init AND
     # every iteration, costing one BroadcastExchange + BNLJ stage per
-    # power iteration (the broadcast subplan is not reused across the
-    # checkpoint job boundary). A single bounded driver count off the
+    # power iteration. A single bounded driver count off the
     # already-persisted degree table replaces all of them with
     # literals; the division stays in the JVM on the same operand
     # types, so ranks are bit-identical.
@@ -247,8 +250,7 @@ def pagerank(
         F.col("s").alias("node"), (F.lit(1.0) / F.lit(n_val)).alias("rank")
     )
     base = F.lit(1.0 - damping) / F.lit(n_val)
-    prev_ckpt: DataFrame | None = None
-    for i in range(iterations):
+    for _ in range(iterations):
         contribs = (
             sym_deg.join(ranks, F.col("s") == F.col("node"))
             .select(F.col("d").alias("node2"), (F.col("rank") / F.col("deg")).alias("c"))
@@ -259,11 +261,6 @@ def pagerank(
             .agg(F.sum("c").alias("in_sum"))
             .select("node", (base + F.lit(damping) * F.col("in_sum")).alias("rank"))
         )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = tracked_local_checkpoint(ranks)
-            if prev_ckpt is not None:
-                release_checkpoint(prev_ckpt)
-            prev_ckpt = ranks
     return ranks
 
 

@@ -15,6 +15,7 @@ before hashing.
 from __future__ import annotations
 
 import importlib
+import weakref
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -141,16 +142,11 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
             # using pandas UDFs work from any driver cwd/deployment.
             from mapreduce_word2vec_spark.runtime import (
                 ensure_workers_can_import,
-                release_tracked,
+                query_scope,
+                release_scope,
             )
 
             ensure_workers_can_import(spark)
-            # Release the PREVIOUS query's operator-level caches
-            # (shingle/signature tables): their lifetime ends when a
-            # new catalog query starts, so repeated catalog/bench runs
-            # in one session don't accumulate cached tables until LRU
-            # eviction pressure hits unrelated queries.
-            release_tracked()
             # Timestamp results must be comparable against a TZ-naive
             # oracle regardless of how the caller built its session;
             # likewise the engine's documented classic-SQL semantics
@@ -158,7 +154,20 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
             # the caller's session left Spark 4's ANSI default on.
             spark.conf.set("spark.sql.session.timeZone", "UTC")
             spark.conf.set("spark.sql.ansi.enabled", "false")
-            return _fn(spark, sf_dir)
+            # The query's operator-level caches live exactly as long as
+            # the DataFrame it returns: freed when that object is
+            # garbage-collected (after the caller's last action), or at
+            # once if construction fails. Not at interpreter exit: the
+            # session and its caches go with the process.
+            with query_scope() as scope:
+                try:
+                    out = _fn(spark, sf_dir)
+                except BaseException:
+                    release_scope(scope)
+                    raise
+            if scope:
+                weakref.finalize(out, release_scope, scope).atexit = False
+            return out
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__

@@ -1,4 +1,5 @@
-"""Worker-side distribution of this package.
+"""Worker-side distribution of this package, and the lifecycle of the
+caches a catalog query takes (:func:`query_scope`).
 
 Python UDFs (pandas UDFs, ``applyInPandas`` functions) are pickled
 **by reference** to their defining module, so executor Python workers
@@ -14,109 +15,76 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+from collections.abc import Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
 from pathlib import Path
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 _ADDED: set[int] = set()
 
-# DataFrames persisted inside operators (shingle tables, minhash/simhash
-# signatures) whose lifetime the operator itself cannot end: the cache
-# must live until the CALLER's terminal action runs, which the operator
-# never sees. Tracked here so a long-lived session (bench loops, the
-# driver's catalog sweep) can release the previous query's caches
-# instead of accumulating them until executor-memory LRU pressure
-# degrades unrelated queries.
-_TRACKED: list[DataFrame] = []
+# Caches an operator takes (shingle tables, iteration state) must live
+# until the CALLER's terminal action runs, which the operator never
+# sees. So they belong to the catalog query that built them: the
+# ``register`` wrapper opens a :func:`query_scope` around the query's
+# construction and frees it once the returned DataFrame is garbage-
+# collected. A ContextVar keeps each thread's (and each nested query's)
+# scope separate.
+_SCOPE: ContextVar[list | None] = ContextVar("persist_scope", default=None)
 
 
-def tracked_persist(df: DataFrame, storage_level=None) -> DataFrame:
-    """``df.persist()`` with session-scoped lifecycle: registered for
-    release at the start of the next catalog query (or an explicit
-    :func:`release_tracked`)."""
-    if storage_level is not None:
-        df = df.persist(storage_level)
-    else:
-        df = df.persist()
-    _TRACKED.append(df)
+@contextmanager
+def query_scope() -> Iterator[list]:
+    """Collect every :func:`tracked_persist` made inside the block into
+    one scope (a list of JVM Dataset handles); pass it to
+    :func:`release_scope` when the query's result is no longer used."""
+    scope: list = []
+    token = _SCOPE.set(scope)
+    try:
+        yield scope
+    finally:
+        _SCOPE.reset(token)
+
+
+def release_scope(scope: list) -> None:
+    """Unpersist every cache recorded in ``scope`` (non-blocking: the
+    blocks drop asynchronously, and a plan still reading them simply
+    recomputes from lineage)."""
+    while scope:
+        try:
+            scope.pop().unpersist(False)
+        except Py4JError:
+            pass  # session already stopped — nothing to release
+
+
+def tracked_persist(df: DataFrame) -> DataFrame:
+    """``df.persist()`` owned by the active :func:`query_scope`. The
+    scope records the JVM handle, not the Python DataFrame, so a query
+    returning its own persisted frame can still be collected (and its
+    scope freed). Outside a scope this is a plain persist the caller
+    owns."""
+    df = df.persist()
+    scope = _SCOPE.get()
+    if scope is not None:
+        scope.append(df._jdf)
     return df
 
 
-# localCheckpoint stores its data as RDD-level cached blocks that
-# DataFrame.unpersist CANNOT reach (it only uncaches CacheManager
-# entries), so without explicit release they linger until the JVM
-# ContextCleaner happens to GC the RDD — unbounded in practice for a
-# long-lived session. Checkpoints made through
-# :func:`tracked_local_checkpoint` record the underlying RDD ids and
-# are freed deterministically by :func:`release_tracked` (or eagerly
-# by :func:`release_checkpoint` for iterative operators that roll
-# checkpoints).
-_TRACKED_RDDS: list[tuple[object, int]] = []  # (SparkContext, rdd id)
-_CKPT_IDS: dict[int, tuple[object, list[int]]] = {}  # id(df) -> (sc, ids)
-
-
-def tracked_local_checkpoint(df: DataFrame) -> DataFrame:
-    """``df.localCheckpoint(eager=True)`` with session-scoped
-    lifecycle: the checkpoint's cached RDD blocks are recorded (by the
-    persistent-RDD-id delta the eager materialization creates) and
-    freed at the next :func:`release_tracked`, exactly like a
-    :func:`tracked_persist` cache."""
-    sc = df.sparkSession.sparkContext
-    before = {int(i) for i in sc._jsc.getPersistentRDDs().keySet()}
-    out = df.localCheckpoint(eager=True)
-    new_ids = [
-        int(i)
-        for i in sc._jsc.getPersistentRDDs().keySet()
-        if int(i) not in before
-    ]
-    _TRACKED_RDDS.extend((sc, i) for i in new_ids)
-    _CKPT_IDS[id(out)] = (sc, new_ids)
-    return out
-
-
-def release_checkpoint(df: DataFrame) -> None:
-    """Eagerly free the RDD blocks behind a
-    :func:`tracked_local_checkpoint` frame that an iterative operator
-    has rolled past (the next checkpoint materialized, so the previous
-    one is unreachable). No-op for frames not checkpointed here."""
-    sc_ids = _CKPT_IDS.pop(id(df), None)
-    if sc_ids is None:
-        return
-    sc, ids = sc_ids
-    _unpersist_rdd_ids(sc, ids)
-    global _TRACKED_RDDS
-    _TRACKED_RDDS = [(s, i) for (s, i) in _TRACKED_RDDS if i not in set(ids)]
-
-
-def _unpersist_rdd_ids(sc, ids) -> None:
-    try:
-        m = sc._jsc.getPersistentRDDs()
-        for rid in ids:
-            if m.containsKey(rid):
-                m.get(rid).unpersist(False)
-    except Exception:
-        pass  # session already stopped — nothing to release
-
-
-def release_tracked() -> None:
-    """Unpersist every tracked DataFrame and checkpoint (non-blocking —
-    Spark drops the blocks asynchronously; correctness is unaffected
-    because unpersisted plans recompute from lineage and checkpoints
-    are only released after their consumers' terminal actions ran)."""
-    global _TRACKED, _TRACKED_RDDS
-    for df in _TRACKED:
-        try:
-            df.unpersist(blocking=False)
-        except Exception:
-            pass  # session already stopped — nothing to release
-    _TRACKED = []
-    by_sc: dict[int, tuple[object, list[int]]] = {}
-    for sc, rid in _TRACKED_RDDS:
-        by_sc.setdefault(id(sc), (sc, []))[1].append(rid)
-    for sc, ids in by_sc.values():
-        _unpersist_rdd_ids(sc, ids)
-    _TRACKED_RDDS = []
-    _CKPT_IDS.clear()
+def detach(df: DataFrame) -> DataFrame:
+    """``df``'s rows behind a leaf plan: a scan of ``df``'s RDD, which
+    reads ``df``'s cache while it lasts and recomputes from lineage
+    after. Iterative operators detach each materialized step before
+    building the next one on it, and a cache that every step of an
+    unrolled plan reads. Left nested, every step's cached plan would
+    contain all the earlier ones, and with adaptive execution on, Spark
+    renders each nested cached plan twice in the description it builds
+    at every stage update: on a path graph the per-step time doubled
+    with every step from the eighth on."""
+    spark = df.sparkSession
+    jdf = spark._jsparkSession.createDataFrame(df._jdf.javaRDD(), df._jdf.schema())
+    return DataFrame(jdf, spark)
 
 
 def ensure_workers_can_import(spark: SparkSession) -> None:

@@ -15,6 +15,8 @@ Catalyst pushes filters and prunes columns into them (verify with
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -80,18 +82,8 @@ def read_json(
     return reader.json(path)
 
 
-# (path -> scan partition count) probe cache for parallelize_scan:
-# getNumPartitions costs one driver-side planning pass, paid once per
-# table per process. NOTE (r9 advice): keyed by path only — if the file
-# at a path were rewritten at a different file count mid-process the
-# stale probe would mis-decide. Unreachable in the driver/bench
-# harnesses (testdata is read-only); long-lived sessions that rewrite
-# tables should clear this dict alongside release_tracked().
-_SCAN_PARTS: dict[str, int] = {}
-
-
 def parallelize_scan(
-    df: DataFrame, spark: SparkSession, path: str, key: str | None = None
+    df: DataFrame, spark: SparkSession, key: str | None = None
 ) -> DataFrame:
     """Scale-adaptive compute distribution for CPU-heavy narrow
     pipelines (optimization guide §2.5 "repartition immediately after
@@ -112,13 +104,11 @@ def parallelize_scan(
     identity: no shuffle is ever added where the scan already
     parallelizes. Opt-IN per call site: only pipelines whose per-row
     compute dominates their scan cost ask for it; model-training
-    inputs (Word2Vec gradient order) never do."""
+    inputs (Word2Vec gradient order) never do. The partition-count probe
+    costs one driver-side planning pass; :func:`read_testdata` pays it
+    once per cached scan plan."""
     target = spark.sparkContext.defaultParallelism
-    parts = _SCAN_PARTS.get(path)
-    if parts is None:
-        parts = df.rdd.getNumPartitions()
-        _SCAN_PARTS[path] = parts
-    if parts * 2 <= target:
+    if df.rdd.getNumPartitions() * 2 <= target:
         # key given → hash distribute (no pre-repartition local sort;
         # the key must be a column the query reads anyway or pruning
         # widens). keyless → round-robin, fully pruning-transparent.
@@ -138,8 +128,10 @@ def parallelize_scan(
 # be shared by every consumer — exactly what a production app does by
 # resolving a catalog table once. This caches ONLY the unexecuted plan
 # object: no rows, no results — every action still scans the parquet
-# files, and a release_tracked()/unpersist cycle never touches it.
-# Keyed WEAKLY on the session so a restarted session rebuilds plans.
+# files, and no query's cache scope ever touches it. Keyed WEAKLY on the
+# session so a restarted session rebuilds plans, and on the table
+# path's modification time so a table rewritten in place gets a fresh
+# file listing instead of the stale one.
 from weakref import WeakKeyDictionary
 
 _SCAN_PLANS: "WeakKeyDictionary[SparkSession, dict[tuple, DataFrame]]" = (
@@ -168,8 +160,9 @@ def read_testdata(
     """
     if table not in TESTDATA_TABLES:
         raise ValueError(f"unknown table {table!r}; expected one of {TESTDATA_TABLES}")
+    path = f"{sf_dir}/{table}.parquet"
     cache = _SCAN_PLANS.setdefault(spark, {})
-    cache_key = (sf_dir, table, parallelize)
+    cache_key = (sf_dir, table, parallelize, os.stat(path).st_mtime_ns)
     cached = cache.get(cache_key)
     if cached is not None:
         return cached
@@ -180,26 +173,20 @@ def read_testdata(
         # later runs. Side effect: any other TIMESTAMP(NANOS) parquet
         # read in the same session also decodes as long.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        else:
-            # Micros parquet decodes as TIMESTAMP_NTZ; cast to the
-            # session-local timestamp type every downstream consumer
-            # (and the nanos branch above) produces. The session
-            # timezone is pinned to UTC, so the cast relabels without
-            # shifting values — and the DuckDB oracle's naive
-            # timestamps keep comparing equal.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        if parallelize:
-            key = parallelize if isinstance(parallelize, str) else None
-            df = parallelize_scan(df, spark, f"{sf_dir}/{table}.parquet", key=key)
-        cache[cache_key] = df
-        return df
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    df = spark.read.parquet(path)
+    if table == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif table == "events":
+        # Micros parquet decodes as TIMESTAMP_NTZ; cast to the
+        # session-local timestamp type every downstream consumer
+        # (and the nanos branch above) produces. The session
+        # timezone is pinned to UTC, so the cast relabels without
+        # shifting values — and the DuckDB oracle's naive
+        # timestamps keep comparing equal.
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     if parallelize:
         key = parallelize if isinstance(parallelize, str) else None
-        df = parallelize_scan(df, spark, f"{sf_dir}/{table}.parquet", key=key)
+        df = parallelize_scan(df, spark, key=key)
     cache[cache_key] = df
     return df
 

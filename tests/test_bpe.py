@@ -170,22 +170,26 @@ def _kernel_of(spark):
 
 def test_bpe_trainer_storage_released(spark):
     """The trainer must leave ZERO persistent RDD blocks behind once
-    release_tracked runs: persist-chain caches are bounded at two live
-    tables during training, and localCheckpoint blocks (which
-    DataFrame.unpersist cannot reach) are freed via the runtime's
-    RDD-id tracking — the round-3 advisor's cache-accumulation
-    finding, pinned."""
+    its query scope is released: persist-chain caches are bounded at
+    two live tables during training and nothing is checkpointed, so
+    every block it takes is a scoped persist — the round-3 advisor's
+    cache-accumulation finding, pinned."""
     from mapreduce_word2vec_spark.operators.bpe import train_bpe_merges
-    from mapreduce_word2vec_spark.runtime import release_tracked
+    from mapreduce_word2vec_spark.runtime import query_scope, release_scope
 
-    release_tracked()  # isolate from caches left by other tests
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+    def persisted() -> set[int]:
+        # ids, not a count: isolates the trainer from caches other tests
+        # left behind
+        return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+    before = persisted()
     wf = spark.createDataFrame(
         [("lowlow", 10), ("lowest", 5), ("newest", 7), ("wider", 3)],
         "word string, freq long",
     )
-    # 7 merges crosses two checkpoint boundaries (every 3rd merge)
-    rules = train_bpe_merges(wf, n_merges=7)
+    with query_scope() as scope:
+        rules = train_bpe_merges(wf, n_merges=7)
     assert len(rules) >= 1
-    release_tracked()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+    assert scope  # the trainer's persists were filed under the scope
+    release_scope(scope)
+    assert not persisted() - before

@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Capture `.explain("formatted")` output for headline queries into
-plans/r10/<name>_<tag>.txt (tag = before/after), for the round-9
-optimization evidence trail.
+plans/r<round>/<name>_<tag>.txt (round zero-padded to two digits,
+tag = before/after), for a round's optimization evidence trail.
 
-    python tools/capture_plans_r10.py <before|after> [name ...]
+    python tools/capture_plans.py <round> <before|after> [name ...]
 """
 
 from __future__ import annotations
@@ -18,8 +18,12 @@ if str(_REPO) not in sys.path:
 
 
 def main() -> int:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or None
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        print(__doc__, file=sys.stderr)
+        return 2
+    round_dir = f"r{int(sys.argv[1]):02d}"
+    tag = sys.argv[2]
+    names = sys.argv[3:] or None
 
     import bench
     from mapreduce_word2vec_spark.plans import catalog
@@ -27,11 +31,11 @@ def main() -> int:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(
-        app_name="capture-plans-r10",
+        app_name=f"capture-plans-{round_dir}",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     qs = catalog.queries()
-    out_dir = _REPO / "plans" / "r10"
+    out_dir = _REPO / "plans" / round_dir
     out_dir.mkdir(parents=True, exist_ok=True)
 
     for name in names or bench.HEADLINE:
